@@ -36,6 +36,7 @@ from ..functions.text import (
     tokens_of,
 )
 from ..registry import register
+from ..sources.sinks import read_index
 
 # Shared DuckDB CTE: the normalized (doc_id, word) token stream.
 SQL_TOKS_CTE = f"""
@@ -687,7 +688,7 @@ def q_boolean_and_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     ARRAY arrives as one row, and the intersection is explode +
     count-matching over len(terms) rows' worth of postings — work
     proportional to the posting lists touched, not the corpus."""
-    idx = spark.read.parquet(stored_index_dir(spark, sf_dir, "flat"))
+    idx = read_index(spark, stored_index_dir(spark, sf_dir, "flat"))
     hits = idx.filter(
         F.col("letter").isin(sorted({t[:1] for t in AND_TERMS}))
         & F.col("word").isin(*AND_TERMS)
@@ -847,7 +848,7 @@ def q_phrase_search_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the difference between this and ``phrase_search`` is the
     difference between reading kilobytes and reading the corpus."""
     phrase = ["table", "hash"]
-    idx = spark.read.parquet(stored_index_dir(spark, sf_dir, "positional"))
+    idx = read_index(spark, stored_index_dir(spark, sf_dir, "positional"))
     toks = (
         idx.filter(
             F.col("letter").isin(sorted({w[:1] for w in phrase}))
@@ -966,7 +967,7 @@ def q_prefix_search_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     letter's vocabulary, independent of corpus size.  A multi-letter
     prefix class (e.g. ``[a-c]%``) would prune to the matching set of
     directories the same way."""
-    idx = spark.read.parquet(stored_index_dir(spark, sf_dir, "flat"))
+    idx = read_index(spark, stored_index_dir(spark, sf_dir, "flat"))
     return (
         idx.filter(
             (F.col("letter") == PREFIX[0]) & F.col("word").startswith(PREFIX)
@@ -1028,7 +1029,7 @@ def q_fuzzy_term_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_variants = [FUZZY_TERM] + [
         FUZZY_TERM[:i] + FUZZY_TERM[i + 1 :] for i in range(len(FUZZY_TERM))
     ]
-    idx = spark.read.parquet(stored_index_dir(spark, sf_dir, "flat"))
+    idx = read_index(spark, stored_index_dir(spark, sf_dir, "flat"))
     candidates = (
         idx.withColumn("variant", F.explode(_deletion_variants(F.col("word"))))
         .filter(F.col("variant").isin(q_variants))
@@ -1061,7 +1062,7 @@ def q_boolean_or_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union of posting arrays from the stored index: letter pruning +
     word pushdown fetch len(terms) rows, explode + distinct unions
     them.  Work scales with the touched posting lists only."""
-    idx = spark.read.parquet(stored_index_dir(spark, sf_dir, "flat"))
+    idx = read_index(spark, stored_index_dir(spark, sf_dir, "flat"))
     hits = idx.filter(
         F.col("letter").isin(sorted({t[:1] for t in OR_TERMS}))
         & F.col("word").isin(*OR_TERMS)
@@ -1090,7 +1091,7 @@ def q_boolean_not_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-proportional — a stopword in the NOT set reaches half the
     corpus — so AQE's runtime size check must pick broadcast vs
     shuffle, not a compile-time pin."""
-    idx = spark.read.parquet(stored_index_dir(spark, sf_dir, "flat"))
+    idx = read_index(spark, stored_index_dir(spark, sf_dir, "flat"))
     universe = idx.select(F.explode("postings").alias("doc_id")).distinct()
     excluded = (
         idx.filter(
@@ -1126,7 +1127,7 @@ def q_letter_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the window's partitionBy matches the storage partitioning — zero
     cross-letter traffic), and WindowGroupLimit truncates each group
     at k before any shuffle materializes the tail."""
-    idx = spark.read.parquet(stored_index_dir(spark, sf_dir, "flat"))
+    idx = read_index(spark, stored_index_dir(spark, sf_dir, "flat"))
     w = Window.partitionBy("letter").orderBy(F.desc("doc_freq"), F.asc("word"))
     return (
         idx.select(
@@ -1166,7 +1167,7 @@ def q_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories grow at very different rates; §5 of SCALE.md).  Reads
     ONLY stored index rows; one tiny aggregation keyed on letter (26
     groups), partition-aligned with the storage layout."""
-    idx = spark.read.parquet(stored_index_dir(spark, sf_dir, "flat"))
+    idx = read_index(spark, stored_index_dir(spark, sf_dir, "flat"))
     return idx.groupBy("letter").agg(
         F.count("*").alias("n_words"),
         F.sum("doc_freq").cast("long").alias("n_postings"),

@@ -48,13 +48,14 @@ def _dir_bytes(path: str) -> int:
     seen_any = False
     for dirpath, _dirs, files in os.walk(path):
         for fn in files:
-            seen_any = True
             try:
                 total += os.stat(os.path.join(dirpath, fn)).st_size
             except OSError:
-                pass
+                continue
+            seen_any = True
     if not seen_any:
-        return -1  # empty/missing dir: unknown, NOT "zero bytes of data"
+        # empty/missing/unstatable dir: unknown, NOT "zero bytes of data"
+        return -1
     return total
 
 

@@ -104,10 +104,19 @@ def read_corpus(
     surface in the scan) — an extra scan of the corpus, so it is opt-in;
     the CLI and tests enable it.
     """
+    import pandas as pd
+
     paths = read_manifest_paths(manifest_path)
+    # a pandas frame rides the Arrow path (session.py enables it): no
+    # pickled PythonRDD, so no Python worker is started for the map
     mapping = spark.createDataFrame(
-        [(os.path.abspath(p), i + 1) for i, p in enumerate(paths)],
-        ["abs_path", "doc_id"],
+        pd.DataFrame(
+            {
+                "abs_path": [os.path.abspath(p) for p in paths],
+                "doc_id": range(1, len(paths) + 1),
+            }
+        ),
+        "abs_path string, doc_id long",
     )
     # Passing N explicit paths makes the DataSource glob-qualify each
     # one driver-side — measured ~10 s for 5000 paths vs ~0.1 s to list

@@ -21,6 +21,7 @@ import string
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def write_letter_index(formatted: DataFrame, out_dir: str) -> None:
@@ -123,12 +124,50 @@ def write_parquet_index(index: DataFrame, out_dir: str) -> None:
     )
 
 
+# path -> (identity of its _SUCCESS marker, inferred schema); see read_index
+_INDEX_SCHEMA: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
+def read_index(spark, path: str, files: list[str] | None = None) -> DataFrame:
+    """Open a stored parquet index (or its bloom sidecar) for one query.
+
+    A bare ``spark.read.parquet`` runs a one-task schema-inference job
+    on every call — half of a cheap lookup's wall time.  A stored index
+    is written once and queried many times, so the schema is inferred
+    once per WRITE of ``path`` (keyed on the mtime and inode of the
+    ``_SUCCESS`` marker Spark's committer leaves last) and the read
+    then passes it explicitly.  A rewrite replaces the marker, so the
+    next call re-infers; a directory without the marker (a remote URI,
+    an external writer) is inferred on every call.  Only the schema is
+    kept: the DataFrame, and so the file listing, is built fresh each
+    call and never serves a file list older than the index.
+
+    ``files`` restricts the scan to those data files of ``path``
+    (``basePath`` keeps the partition columns alive)."""
+    try:
+        st = os.stat(os.path.join(path, "_SUCCESS"))
+        marker = (st.st_mtime_ns, st.st_ino)
+    except OSError:
+        marker = None
+    memo = _INDEX_SCHEMA.get(path)
+    if marker is not None and memo is not None and memo[0] == marker:
+        schema = memo[1]
+    else:
+        schema = spark.read.parquet(path).schema
+        if marker is not None:
+            _INDEX_SCHEMA[path] = (marker, schema)
+    reader = spark.read.schema(schema)
+    if files is None:
+        return reader.parquet(path)
+    return reader.option("basePath", path).parquet(*files)
+
+
 def lookup_term(spark, index_dir: str, term: str) -> DataFrame:
     """Posting-list lookup against the stored index.  The redundant
     letter predicate makes partition pruning explicit in the plan
     (PartitionFilters: letter = substr(term,1,1)); the word predicate
     pushes into the parquet scan of that one directory."""
-    idx = spark.read.parquet(index_dir)
+    idx = read_index(spark, index_dir)
     return idx.filter(
         (F.col("letter") == term[:1]) & (F.col("word") == term)
     )
@@ -299,7 +338,7 @@ def write_bloom_sidecar(spark, index_dir: str) -> str:
     exploded to bit positions, set-aggregated per file.  Returns the
     sidecar directory (``<index_dir>_bloom``)."""
     idx = (
-        spark.read.parquet(index_dir)
+        read_index(spark, index_dir)
         .select("word")
         .withColumn("file", F.input_file_name())
     )
@@ -318,7 +357,7 @@ def bloom_candidate_files(spark, sidecar_dir: str, term: str) -> list[str]:
     construction (build and probe share ``bloom_positions``); false
     positives only cost a wasted file read.  The collect is
     sidecar-sized (one row per candidate FILE, not per row)."""
-    side = spark.read.parquet(sidecar_dir)
+    side = read_index(spark, sidecar_dir)
     cond = F.lit(True)
     for p in bloom_positions(F.lit(term)):
         cond = cond & F.array_contains("bits", p)
@@ -327,9 +366,11 @@ def bloom_candidate_files(spark, sidecar_dir: str, term: str) -> list[str]:
 
 def bloom_pruned_lookup(spark, index_dir: str, sidecar_dir: str,
                         term: str) -> DataFrame:
-    """Term lookup reading ONLY the bloom-candidate files.  basePath
-    keeps the letter partition column alive on the direct file read;
-    the word predicate still pushes into each candidate's scan."""
+    """Term lookup reading ONLY the bloom-candidate files; the word
+    predicate still pushes into each candidate's scan.  With no
+    candidate the answer is the index's (cached) schema under a false
+    filter, which Catalyst folds to an empty local relation: no job,
+    no Python worker."""
     # partition pruning composes with bloom skipping: the letter
     # predicate is applied to the candidate PATHS (what Catalyst's
     # PartitionFilters would do), so a bloom false positive in another
@@ -340,10 +381,5 @@ def bloom_pruned_lookup(spark, index_dir: str, sidecar_dir: str,
         if f"/letter={term[:1]}/" in f
     ]
     if not files:
-        schema = spark.read.parquet(index_dir).schema
-        return spark.createDataFrame([], schema).filter(F.col("word") == term)
-    return (
-        spark.read.option("basePath", index_dir)
-        .parquet(*files)
-        .filter(F.col("word") == term)
-    )
+        return read_index(spark, index_dir).filter(F.lit(False))
+    return read_index(spark, index_dir, files).filter(F.col("word") == term)

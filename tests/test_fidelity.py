@@ -385,10 +385,12 @@ def test_random_adversarial_corpus_byte_identical_to_compiled_reference(
     import shutil
     import subprocess
 
-    if shutil.which("g++") is None:
-        import pytest
+    from scripts.race_reference import REF_SRC
 
+    if shutil.which("g++") is None:
         pytest.skip("g++ unavailable")
+    if not os.path.exists(REF_SRC):
+        pytest.skip(f"reference source {REF_SRC} unavailable")
 
     rng = random.Random(42)
     pool = (
@@ -423,7 +425,7 @@ def test_random_adversarial_corpus_byte_identical_to_compiled_reference(
 
     ref_bin = str(tmp_path / "ref_bin")
     subprocess.run(
-        ["g++", "-O2", "-pthread", "-o", ref_bin, "/root/reference/main.c++"],
+        ["g++", "-O2", "-pthread", "-o", ref_bin, REF_SRC],
         check=True,
     )
     ref_out = tmp_path / "ref_out"

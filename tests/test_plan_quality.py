@@ -1676,6 +1676,18 @@ def test_initial_shuffle_partitions_derive_from_input_volume(spark, monkeypatch)
     assert got >= cpu_count()
 
 
+def test_dir_bytes_unstatable_entries_are_unknown_not_zero(tmp_path):
+    """An entry the walk lists but cannot stat (here a dangling
+    symlink) contributes no bytes and no evidence: a directory of only
+    such entries reads as -1 ("unknown"), never as 0 bytes of data."""
+    from inverted_index_using_the_map_reduce_paradigm_spark.session import _dir_bytes
+
+    (tmp_path / "dangling").symlink_to(tmp_path / "missing")
+    assert _dir_bytes(str(tmp_path)) == -1
+    (tmp_path / "real.bin").write_bytes(b"x" * 5)
+    assert _dir_bytes(str(tmp_path)) == 5
+
+
 def test_initial_shuffle_partitions_floor_at_requested_width():
     """ADVICE r13 (medium): an EXPLICIT shuffle_partitions request (the
     CLI's mappers/reducers parallelism over a manifest corpus unrelated
